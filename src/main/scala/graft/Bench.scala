@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. `value` is the total seconds across all registered
@@ -129,14 +130,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.FuseDotProduct)
+    val spark = Engine.session()
     // Untimed warmup: JIT, codegen cache, parquet footer/file-index reads,
     // OS page cache for EVERY fixture table — otherwise whichever query
     // first touches a table absorbs its listing+footer+disk cost and the
@@ -159,10 +153,10 @@ object Bench {
           val aggs = df.columns.map(c => count(col(c)))
           df.agg(aggs.head, aggs.tail: _*).collect()
         }
-        catch { case _: Throwable => () })
+        catch { case NonFatal(_) => () })
     }
     try SparkEntry.queries("q01_dim_decode_join")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // d22's serving contract: the prior converged assignment and band
     // index PRE-EXIST the ingest being priced (a deployment's build job
     // wrote them yesterday). Pre-build the stored prior untimed so the
@@ -174,7 +168,7 @@ object Bench {
     // timed window and record the full build as a fast-path measurement
     def warmup(tag: String)(f: => Any): Unit =
       try { f; () }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $tag warmup failed (the timed " +
           s"sample will pay the build): ${e.getMessage}")
       }
@@ -214,11 +208,18 @@ object Bench {
     // query (pre-r10, a pass-2 exception's elapsed time was min'd into the
     // headline, so a query that broke BETWEEN passes looked like it got
     // 100x faster instead of visibly failing).
-    def sample(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[Double] = {
+    val registry = SparkEntry.queries
+    def sample(name: String): Option[Double] = {
+      val fn = registry(name)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case _: Throwable => None }
+      try {
+        fn(spark, sfDir).count()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case NonFatal(e) =>
+        System.err.println(
+          s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        None
+      }
     }
     // Optional local-tuning filter (regex over query names) — the driver
     // never sets it, so driver benches always cover the full registry.
@@ -226,10 +227,8 @@ object Bench {
     def keep(name: String): Boolean =
       only.forall(_.pattern.matcher(name).matches())
     // sorted order: deterministic run sequence, comparable round-over-round
-    val results = SparkEntry.queries.toVector.filter(kv => keep(kv._1))
-      .sortBy(_._1).map { case (name, fn) =>
-        name -> sample(fn)
-      }.toMap
+    val results = registry.keys.toVector.filter(keep).sorted
+      .map(name => name -> sample(name)).toMap
     val failed = results.collect { case (n, None) => n }.toVector.sorted
     // Full per-query map on stderr for local tuning (never on stdout — the
     // driver tails stdout and the full map would blow the 2000-char budget).
@@ -257,13 +256,11 @@ object Bench {
     // A pass that throws contributes NO sample: a query failing on pass 2
     // keeps its pass-1 time, one failing on both passes is simply absent
     // from `queries` and listed under `failed`.
-    val second = headline.filter(keep).flatMap { h =>
-      SparkEntry.queries.get(h).flatMap(sample).map(h -> _)
-    }.toMap
-    val qs = headline.flatMap { h =>
-      val best = (results.get(h).flatten.toSeq ++ second.get(h).toSeq)
-        .minOption
-      best.map(v => s"\"$h\":${r3(v)}")
+    val second = headline.filter(keep).filter(registry.contains)
+      .flatMap(h => sample(h).map(h -> _)).toMap
+    val min2warm = headline.flatMap { h =>
+      (results.get(h).flatten.toSeq ++ second.get(h).toSeq).minOption
+        .map(v => s"\"$h\":${r3(v)}")
     }.mkString("{", ",", "}")
     // `value`/`n_queries` cover the PRODUCTION queries; the
     // deliberately-superlinear diagnostics (see `diagnostics` — currently
@@ -280,7 +277,7 @@ object Bench {
     val failedJson =
       if (failed.isEmpty) ""
       else failed.map(n => s""""$n"""").mkString(""","failed":[""", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${prodRes.size},"hmode":"min2warm","queries":$qs,"diag_sec":$diagSec,"diag":$diagJson$failedJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${prodRes.size},"hmode":"min2warm","queries":$min2warm,"diag_sec":$diagSec,"diag":$diagJson$failedJson,"sf":"$sfDir"}""")
     // Truncation-proof trailer (r19, verdict item 3): the harness keeps
     // only the LAST ~2000 chars of stdout, and r18's capture clipped the
     // long line above mid-JSON — losing the `value` printed at its front
@@ -298,14 +295,10 @@ object Bench {
     try {
       val fp = results.collect { case (n, Some(v)) => s""""$n":${r3(v)}""" }
         .toVector.sorted.mkString("{", ",", "}")
-      val m2 = (headline.filter(keep).flatMap { h =>
-        (results.get(h).flatten.toSeq ++ second.get(h).toSeq).minOption
-          .map(v => s""""$h":${r3(v)}""")
-      }).mkString("{", ",", "}")
-      val json = s"""{"sf":"$sfDir","cpus":$cpus,"hmode_first_pass":"cold-ish single sample","first_pass":$fp,"min2warm_headline":$m2,"diag":$diagJson,"total_first_pass_production":$total,"diag_sec":$diagSec$failedJson}"""
+      val json = s"""{"sf":"$sfDir","cpus":${Engine.cpus},"hmode_first_pass":"cold-ish single sample","first_pass":$fp,"min2warm_headline":$min2warm,"diag":$diagJson,"total_first_pass_production":$total,"diag_sec":$diagSec$failedJson}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] bench_full.json write failed: ${e.getMessage}")
     }
     spark.catalog.clearCache()

@@ -1,11 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
-/** Plan-inspection harness: `runMain graft.Explain <query> [sfDir]` prints
-  * the formatted physical plan and a warmed timing for one registered query
-  * (no args: lists query names). The perf loop is: run this, read the plan,
-  * check PushedFilters/ReadSchema/broadcasts/shuffle count, iterate.
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Plan dumper: writes each named query's formatted plan to
+  * `<outDir>/<query>_<tag>.txt`, all in one engine session (no args: lists
+  * the registered query names).
+  *
+  * `runMain graft.Explain <sfDir> <outDir> <tag> <query...>`
+  *
+  * Each builder is called exactly once and the dumped plan is that call's
+  * own QueryExecution, after one `count()`: stored-artifact roots then
+  * exist and persisted frames show as InMemoryRelation, as they do
+  * in-suite. A second builder call would re-run its side effects
+  * (append-mode artifact writes, eager walk queries), so the plan could
+  * differ from what one in-suite run sees. For timings, run `graft.Bench`
+  * with `SPARK_GRAFT_BENCH_ONLY`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -13,22 +25,21 @@ object Explain {
       SparkEntry.queries.keys.toSeq.sorted.foreach(println)
       return
     }
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries(name)
-    fn(spark, sfDir).count() // warm: JIT + codegen + file index
-    val t0 = System.nanoTime()
-    val n = fn(spark, sfDir).count()
-    println(f"$name: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s (warmed)")
-    fn(spark, sfDir).explain("formatted")
+    require(args.length >= 4,
+      "usage: Explain <sfDir> <outDir> <tag> <query...>")
+    val Array(sfDir, outDir, tag) = args.take(3)
+    val registry = SparkEntry.queries
+    val spark = Engine.session()
+    Files.createDirectories(Paths.get(outDir))
+    args.drop(3).foreach { name =>
+      val df = registry(name)(spark, sfDir)
+      df.count()
+      val plan = df.queryExecution
+        .explainString(ExplainMode.fromString("formatted"))
+      Files.write(Paths.get(outDir, s"${name}_$tag.txt"),
+        plan.getBytes(StandardCharsets.UTF_8))
+      System.err.println(s"[explain] wrote $name ($tag)")
+    }
     spark.stop()
   }
 }

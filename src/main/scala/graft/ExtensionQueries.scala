@@ -115,13 +115,13 @@ object ExtensionQueries {
     * oracle unrolls a fixed chain instead. Results agree as long as the
     * unroll depth ≥ the true PURE-EDGE convergence depth at the scales
     * the oracle is actually compared at — extra rounds past the fixed
-    * point are no-ops. Measured pure-edge depths (graft.tools.DepthCheck,
-    * r14 fixtures): 2 at sf0.001, 3 at sf0.01 — the two oracle-compare
-    * scales, so 8 carries ≥ +5 margin at BOTH — and 22 at sf0.1, which
-    * EXCEEDS the unroll: sf0.1+ is engine-only territory (the driver
-    * never oracle-compares there; the engine's adaptive loop converges
-    * regardless of depth), and any future widening of the compared
-    * scales must raise this constant first. IndependentSemanticsSpec
+    * point are no-ops. Measured pure-edge depths (recorded in PLANS.md,
+    * round-13 full-suite scale sweep; r14 fixtures): 2 at sf0.001, 3 at
+    * sf0.01 — the two oracle-compare scales, so 8 carries ≥ +5 margin at BOTH
+    * — and 22 at sf0.1, which EXCEEDS the unroll: sf0.1+ is engine-only
+    * territory (the oracle is never compared there; the engine's adaptive
+    * loop converges regardless of depth), and any future widening of the
+    * compared scales must raise this constant first. IndependentSemanticsSpec
     * replays the unrolled oracle semantics against the engine at every
     * compared scale to pin exactly that margin; the chain fixture that a
     * short FIXED round count provably mislabels is pinned in Round13Spec.

@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * geometry whose serving surface saturates at 256 vectors: s42's own
   * sf10 audit read in-cap 256 / 200 000 — 0.13% of a decade corpus can
   * ever be anyone's neighbor, at ANY scale, because both knobs are
-  * fixture constants. The operators were always parameterized (MaintProbe
-  * proves correctness and the damage-radius law at k = 256/1024); what
-  * was missing is a REGISTERED, oracle-gated row at a geometry a
-  * deployment would run. s44/s45 are that row and its audit, at
+  * fixture constants. The operators were always parameterized (PLANS.md's r19
+  * damage-radius table shows correctness and the law at k = 256/1024); what
+  * was missing is a REGISTERED, oracle-gated row at a geometry a deployment
+  * would run. s44/s45 are that row and its audit, at
   * [[ivfCellsFor]] cells; the pinned rows stay registered as the
   * fixed-geometry regression anchors (the verdict's explicit option, so
   * every existing IVF training-CTE oracle keeps its key).
@@ -289,9 +289,9 @@ object ExtensionQueries11 {
     // supercell mis-assigns), so this row REPORTS the agreement against
     // the exact flat argmax next to the candidate-count saving — the
     // d27/s23 design-table discipline: grade the trade, don't bury it.
-    // Measured (RouteProbe, r20): at the sf10 geometry (k=4167, m=92)
-    // routing is 8.4x faster wall (172.2 -> 20.6 s) at 22.8x fewer
-    // candidates, but agreement on the ISOTROPIC fixture reads 26.4% —
+    // Measured (PLANS.md, s47's r20 routing table): at the sf10 geometry
+    // (k=4167, m=92) routing is 8.4x faster wall (172.2 -> 20.6 s) at 22.8x
+    // fewer candidates, but agreement on the ISOTROPIC fixture reads 26.4% —
     // random vectors have near-tied cosines to all centroids, so the
     // exact argmax is itself noise and top-2-of-92 supercells cannot
     // cover where the near-tie winner hides. On the clustered 20k

@@ -503,7 +503,7 @@ object ExtensionQueries3 {
     * (ph_a/ph_b and friends), applied BEFORE the dedup of band-pair
     * multiplicity: row-local filters commute with distinct, and on
     * near-dup-dense corpora the candidate join emits ~30× more rows
-    * than survive a hamming verdict (M11Probe, sf1: 113 M join rows →
+    * than survive a hamming verdict (PLANS.md r16, sf1: 113 M join rows →
     * 28.3 M distinct candidates → 438 k hamming-≤6 pairs), so filtering
     * first collapses the distinct's shuffle by that factor.
     */
@@ -532,10 +532,7 @@ object ExtensionQueries3 {
       .distinct()
   }
 
-  // private[graft]: tools.M11Probe measures the same band geometry —
-  // sharing the extraction keeps the probe's denominators honest if the
-  // band width ever changes
-  private[graft] def phashBandVal(ph: Column, bnd: Int): Column =
+  private def phashBandVal(ph: Column, bnd: Int): Column =
     shiftrightunsigned(ph, 8 * bnd).bitwiseAND(lit(255L))
 
   /** Row-local shared-band count between `ph_a` and `ph_b` — replaces
@@ -727,7 +724,7 @@ object ExtensionQueries3 {
     // ONLY (hamming ≤ 6 — making the serving form match this design
     // note, which r15's cut didn't: it listed every ≥2-band candidate
     // with a verdict, 28.3 M rows at sf1 where only 438 k are dups —
-    // M11Probe), with the filter pushed BEFORE the candidate distinct
+    // PLANS.md r16), with the filter pushed BEFORE the candidate distinct
     // so the shuffle collapses with the output. m05 (diag) remains the
     // full candidate-with-verdict listing. Same ≥2-band completeness
     // rule as m05 for the hamming ≤ 6 verdict.

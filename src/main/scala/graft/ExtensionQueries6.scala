@@ -115,7 +115,7 @@ object ExtensionQueries6 {
       // the composition (r19, closing the r18 verdict's gap): the
       // clustered-decade grading showed IVF entries and symmetric edges
       // only deliver TOGETHER (recall@5 0.57 vs ≤ 0.18 for either half
-      // — WalkProbe, PLANS.md r18), so the standing index-selection
+      // — the r18 recall table in PLANS.md), so the standing index-selection
       // table must carry the configuration a deployment would pick
       "graph_walk_ivf_sym" -> ExtensionQueries8.graphWalkIvfSym(s, dir)
         .select(col("query_id"), col("vec_id"), col("rank")))

@@ -31,13 +31,13 @@ object ExtensionQueries8 {
     * point every extra unrolled round is a no-op (assignment is a pure
     * function of centroids, recompute of an unchanged assignment returns
     * the same centroids), so the unrolled oracle equals the converged
-    * engine. Measured depths (graft.tools.KmDepth): 13 at sf0.001, 25 at
-    * sf0.01 (30 at sf0.1 and 127 at sf1, engine-only scales — the growth
-    * that makes full-corpus exact convergence a per-scale cost and
-    * motivates s33's bounded-sample form) — hence 30 here: ≥ +5 margin
-    * at both oracle scales. Round13bSpec pins engine-converged ==
-    * engine-fixed(unroll) on the fixture, which is exactly that
-    * idempotence margin.
+    * engine. Measured depths (PLANS.md, "Until-convergence k-means (s32)"):
+    * 13 at sf0.001, 25 at sf0.01 (30 at sf0.1 and 127 at sf1, engine-only
+    * scales — the growth that makes full-corpus exact convergence a
+    * per-scale cost and motivates s33's bounded-sample form) — hence 30
+    * here: ≥ +5 margin at both oracle scales. Round13bSpec pins
+    * engine-converged == engine-fixed(unroll) on the fixture, which is
+    * exactly that idempotence margin.
     */
   val KmConvOracleUnroll = 30
 
@@ -53,7 +53,7 @@ object ExtensionQueries8 {
 
   /** s33's oracle replay rounds — ≥ the measured SAMPLE convergence
     * depths with margin (same idempotence argument as
-    * [[KmConvOracleUnroll]]). Measured sample depths (graft.tools.KmDepth
+    * [[KmConvOracleUnroll]]). Measured sample depths (PLANS.md, round 13,
     * with sample=250): 8 / 9 / 6 / 5 at sf0.001 / 0.01 / 0.1 / sf1 —
     * bounded and FLAT across scales by construction (the sample size is
     * fixed), vs the full corpus's growing 13 / 25 / 30 / 127.
@@ -686,11 +686,11 @@ object ExtensionQueries8 {
     walkFrom(s, dir, ivfWalkSeeds)
 
   /** s39: IVF-routed entries AND symmetric edges — the composition.
-    * Measured at the clustered decade (tools/WalkProbe on a 20k-vector
-    * 10-cluster ScaleUp clusterBoost fixture): neither half suffices
-    * alone — s36's fixed entries read recall@5 0.02 (blind entries),
-    * s37's query-aware entries still 0.02 on the DIRECTED capped graph
-    * (the walk lands in the right region — purity 0.80 — then strands
+    * Measured at the clustered decade (the r18 walk-family recall table
+    * in PLANS.md: a 20k-vector fixture with 10 planted clusters): neither
+    * half suffices alone — s36's fixed entries read recall@5 0.02 (blind
+    * entries), s37's query-aware entries still 0.02 on the DIRECTED capped
+    * graph (the walk lands in the right region — purity 0.80 — then strands
     * on anti-hub reachability), s38's symmetric edges from blind
     * entries reach only 0.18; the composition reads 0.57 at the same
     * beam/hops (saturating by hops 6). The 200-point Round15Spec
@@ -764,12 +764,12 @@ object ExtensionQueries8 {
     * EAGER semantics (r21 advice, documented): because each hop collects,
     * CONSTRUCTING a walk query's DataFrame executes the whole walk — the
     * returned frame is the final beam's LocalRelation ranking, not a lazy
-    * pipeline. Plan-only consumers (Explain, PlanSpec's all-queries sweep,
-    * ExplainDump) therefore pay the walk's execution just to look at the
-    * plan; that is the accepted price of the 2.4–3x serving win (the
-    * alternative — a lazily-initialized builder — would make the registry
-    * value stateful for no production benefit, since every production
-    * consumer acts on the frame anyway).
+    * pipeline. Plan-only consumers (Explain, PlanSpec's all-queries sweep)
+    * therefore pay the walk's execution just to look at the plan; that is the
+    * accepted price of the 2.4–3x serving win (the alternative — a
+    * lazily-initialized builder — would make the registry value stateful for
+    * no production benefit, since every production consumer acts on the frame
+    * anyway).
     */
   private[graft] def walkOver(g: DataFrame, e: DataFrame, q: DataFrame,
       mkSeeds: (DataFrame, DataFrame) => DataFrame,
@@ -1724,8 +1724,8 @@ object ExtensionQueries8 {
 
     // Hierarchical bidirectional walk (s39, r18): s37's IVF-routed
     // entries over s38's symmetrized edges — the composition, added
-    // after grading the family at a CLUSTERED decade (tools/WalkProbe
-    // on a 20k-vector 10-cluster ScaleUp clusterBoost fixture) showed
+    // after grading the family at a CLUSTERED decade (the r18 recall
+    // table in PLANS.md: 20k vectors, 10 planted clusters) showed
     // neither half suffices alone: query-aware entries on the directed
     // graph land in the right region then strand on anti-hub
     // reachability (recall@5 0.02 at purity 0.80), symmetric edges

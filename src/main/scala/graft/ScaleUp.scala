@@ -36,56 +36,14 @@ object ScaleUp {
     val srcDir = args(0)
     val outDir = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val shiftDays = args.lift(3).map(_.toInt).getOrElse(0)
-    val clusterBoost = args.lift(4).map(_.toDouble).getOrElse(0.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    scaleAll(spark, srcDir, outDir, factor, shiftDays, clusterBoost)
+    val spark = Engine.session()
+    scaleAll(spark, srcDir, outDir, factor)
     spark.stop()
   }
 
-  /** Opt-in fixture-variant knobs (both default off; defaults keep
-    * standing fixtures byte-comparable round-over-round):
-    *
-    * `shiftDays` > 0 makes event TIME grow with data volume: copy i's
-    * events shift by i·shiftDays days, so 10× data occupies 10× the time
-    * span at CONSTANT density (shiftDays = the source span, 30 days,
-    * tiles copies edge to edge). The default 0 keeps the historical
-    * behavior — every copy inside the source's fixed span — so standing
-    * fixtures (graft_sf1/graft_sf10) stay comparable round-over-round;
-    * span-proportional fixtures exist to grade operators whose cost is
-    * interval-DENSITY-driven (e22's all-windows exposure join: a fixed
-    * span inflates density 10×/decade and pair counts ~100×/decade,
-    * which no real corpus does). Per-user sessions are unaffected
-    * (user_id shifts with the copy, so a copy's sessions relocate
-    * together, never merging across copies).
-    *
-    * `clusterBoost` > 0 plants CLUSTER structure in the scaled
-    * embeddings: copy i ≥ 1 adds boost·‖v‖ to two copy-specific
-    * dimensions ((7i, 7i+1) mod 64) on top of the rotation, so the
-    * copies become `factor` well-separated directional clusters with
-    * the copy index as ground truth (copy 0 stays the original
-    * isotropic background, preserving ScaleUp's copy-0-is-the-fixture
-    * contract). The registered fixture's embeddings are isotropic —
-    * no kNN graph over them is navigable and walk recall reads ~chance
-    * (r14's recorded ~0.07) — so clustered variants exist to grade the
-    * s36/s37/s38 walk family's recall at a REAL decade the way
-    * Round15Spec grades it at 200 constructed points.
-    */
   def scaleAll(spark: SparkSession, srcDir: String, outDir: String,
-      factor: Int, shiftDays: Int = 0, clusterBoost: Double = 0.0): Unit = {
+      factor: Int): Unit = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    // negative values would silently produce backwards-shifted timestamps
-    // / anti-boosted embeddings — refuse rather than write a broken fixture
-    require(shiftDays >= 0, s"shiftDays must be >= 0, got $shiftDays")
-    require(clusterBoost >= 0.0,
-      s"clusterBoost must be >= 0.0, got $clusterBoost")
     def src(name: String) = spark.read.parquet(s"$srcDir/$name.parquet")
 
     /** Union `factor` shifted copies of `df`. `shift(df, i)` must return
@@ -123,12 +81,7 @@ object ScaleUp {
       "orders" -> rep(src("orders"))(shiftKeys("o_orderkey", "o_custkey")),
       "lineitem" -> rep(src("lineitem"))(
         shiftKeys("l_orderkey", "l_partkey", "l_suppkey")),
-      "events" -> rep(src("events")) { (df, i) =>
-        val shifted = shiftKeys("event_id", "user_id")(df, i)
-        if (shiftDays == 0 || i == 0) shifted
-        else shifted.withColumn("ts",
-          col("ts") + expr(s"INTERVAL '${i.toLong * shiftDays}' DAY"))
-      },
+      "events" -> rep(src("events"))(shiftKeys("event_id", "user_id")),
       "documents" -> rep(src("documents")) { (df, i) =>
         val shifted = shiftKeys("doc_id")(df, i)
         if (i == 0) shifted
@@ -153,23 +106,9 @@ object ScaleUp {
           // rotate by i: element j of the copy is element (j+i) mod 64 of
           // the original — distinct vectors, same norm and per-dim family
           val d = 64
-          val rotated = shifted.withColumn("embedding",
+          shifted.withColumn("embedding",
             transform(sequence(lit(0), lit(d - 1)), j =>
               element_at(col("embedding"), ((j + i) % d + 1).cast("int"))))
-          if (clusterBoost == 0.0) rotated
-          else {
-            val (d1, d2) = ((7 * i) % d, (7 * i + 1) % d)
-            rotated
-              .withColumn("__nrm", sqrt(aggregate(col("embedding"),
-                lit(0.0d), (a, x) => a + x.cast("double") * x.cast("double"))))
-              .withColumn("embedding",
-                transform(col("embedding"), (x, j) =>
-                  when(j === d1 || j === d2,
-                    (x.cast("double") + lit(clusterBoost) * col("__nrm"))
-                      .cast("float"))
-                    .otherwise(x)))
-              .drop("__nrm")
-          }
         }
       })
 

@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   * Optional third arg: regex over query names, for targeted local re-checks
@@ -12,23 +15,16 @@ object Verify {
     val nameFilter = args.lift(2).map(_.r)
     def keep(name: String): Boolean =
       nameFilter.forall(_.pattern.matcher(name).matches())
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Engine optimizer rules run under the correctness gate: if FuseDotProduct
-    // ever diverged from the portable fold, every vector oracle would fail.
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.FuseDotProduct)
+    // The engine session carries FuseDotProduct, so the rule runs under the
+    // correctness gate: if it ever diverged from the portable fold, every
+    // vector oracle would fail.
+    val spark = Engine.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name))
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
     }

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * MessageDigest and assembles the long directly. It sits under every NDV
   * sketch build (q94/q96/q99/q101/q104's per-(row x column) catalog hash),
   * t36's per-token DSIR hash, and the q88/q95 CMS grids — full-corpus
-  * passes at 100 TB. Measured via tools/LakeSweepProbe (sf0.1 lineitem,
+  * passes at 100 TB. Measured in OPTIMIZATION_r22.md (sf0.1 lineitem,
   * noop sink): the long-form+hash pass 5.93 -> 2.20 s, the full fused
   * ANALYZE aggregate 8.81 -> 3.75 s; bench min2warm at 32 cores:
   * q99 10.01 -> 5.68 s, q96 2.16 -> 1.52 s, q88 1.06 -> 0.62 s.

@@ -380,7 +380,7 @@ object Dedup {
     //    roughly squaring every label's reach. Edge rounds alone need
     //    diameter rounds; with a jump per poll the combined loop
     //    converges in O(log diameter) — the sf0.1 LSH candidate graph's
-    //    real pure-edge depth is 22 on the current fixtures (DepthCheck,
+    //    real pure-edge depth is 22 on the current fixtures (PLANS.md,
     //    r14; ~10 on earlier generations — either way the fixed-5 form
     //    was silently under-merging it; 123 jobs / 18 s without jumps),
     //    and at 100 TB a long chain costs log, not linear, passes. Jump
@@ -526,7 +526,7 @@ object Dedup {
     * scale, fixed ×bands), collision rows compute jaccard in place, and
     * the aggregation that dedups multi-band pairs shuffles three numbers
     * per pair. The trade: a pair colliding in k>1 bands computes its
-    * intersection k times. Measured (FuseProbe, same-session A/B, sf1):
+    * intersection k times. Measured (PLANS.md r17, same-session A/B, sf1):
     * word-shingle 4×3 split 5.7–6.5 s → fused 5.2 s even though the
     * duplicate-compute factor is 3.0× (20.4 M collision rows over 6.7 M
     * pairs) — the removed pair-scale array shuffle outweighs tripled

@@ -238,8 +238,8 @@ object LocationSummary {
     * append emits one file per upstream partition — and AQE alone cannot
     * help, because the typical caller hands a cached summary in, so the
     * write plan has NO exchange for AQE to coalesce (measured at sf0.1,
-    * tools/SinkProbe: plain 4 files / 16.2 KB total vs rebalanced 1 file
-    * / 4.4 KB — per-file footer overhead tripled the bytes — and the
+    * PLANS.md r17 sink probe: plain 4 files / 16.2 KB total vs rebalanced
+    * 1 file / 4.4 KB — per-file footer overhead tripled the bytes — and the
     * rebalanced write was FASTER, 0.35 vs 0.62 s, fewer file commits).
     * Rebalancing BY ZIP_CODE keeps each zip's rows in one file if the
     * output ever spans several target-size files (equality pruning on

@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.CosineSimilarity
 
 /** SparkSessionExtensions registration point for the engine's native
-  * functions, so SQL users get them too:
+  * functions and optimizer rules, so SQL users get them too. `graft.Engine`
+  * installs it on the engine session:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  *   val spark = graft.Engine.session()
   *   spark.sql("SELECT cosine_sim(a.embedding, b.embedding) ...")
   * }}}
   *
@@ -30,11 +31,8 @@ object GraftExtensions {
   type Registration =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  /** Every native function the SQL surface exposes. Public so tests (and
-    * harnesses that manage their own registry) can register the exact
-    * builders the extension injects.
-    */
-  val registrations: Seq[Registration] = Seq(
+  /** Every native function the SQL surface exposes. */
+  private val registrations: Seq[Registration] = Seq(
     simple("cosine_sim", classOf[CosineSimilarity].getName, 2,
       e => CosineSimilarity(e(0), e(1))),
     simple("dot_product", classOf[graft.functions.DotProduct].getName, 2,

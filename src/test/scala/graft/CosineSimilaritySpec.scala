@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.CosineSimilarity
 import graft.operators.VectorOps
 
 class CosineSimilaritySpec extends AnyFunSuite {
@@ -73,13 +70,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("cosine_sim is SQL-callable once registered (GraftExtensions wiring)") {
-    // getOrCreate reuses the shared session, so register through the same
-    // builder function GraftExtensions injects.
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(exprs(0), exprs(1)))
     val got = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").first.getDouble(0)
     assert(math.abs(got - 1.0) < 1e-12)

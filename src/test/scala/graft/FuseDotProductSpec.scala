@@ -4,18 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.VectorOps
-import graft.plans.FuseDotProduct
+import graft.SparkTestSession.withFuseDotProduct
 
 class FuseDotProductSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  private def withRule[A](body: => A): A = {
-    spark.experimental.extraOptimizations ++= Seq(FuseDotProduct)
-    try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == FuseDotProduct)
-  }
 
   private val edgeDf = Seq(
     (0, Some(Seq(Some(1.5), Some(-2.0), Some(3.25))), Some(Seq(Some(2.0), Some(0.5), Some(-1.0)))),
@@ -33,7 +26,7 @@ class FuseDotProductSpec extends AnyFunSuite {
       .select(col("idx"), VectorOps.dot(col("a"), col("b")).as("d"))
       .orderBy(col("idx"))
     val portable = query().collect()
-    val (fused, plan) = withRule {
+    val (fused, plan) = withFuseDotProduct {
       val df = query()
       (df.collect(), df.queryExecution.optimizedPlan.toString)
     }
@@ -58,7 +51,7 @@ class FuseDotProductSpec extends AnyFunSuite {
       "aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, (acc, v) -> acc + v * 2.0d)",
       // zip lambda multiplies a variable with itself
       "aggregate(zip_with(a, b, (x, y) -> x * x), 0.0d, (acc, v) -> acc + v)")
-    withRule {
+    withFuseDotProduct {
       cases.foreach { e =>
         val plan = edgeDf.selectExpr(s"$e AS d")
           .queryExecution.optimizedPlan.toString
@@ -78,7 +71,7 @@ class FuseDotProductSpec extends AnyFunSuite {
       "aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v) AS d")
       .orderBy("idx")
     val portable = query().collect()
-    val (fused, plan) = withRule {
+    val (fused, plan) = withFuseDotProduct {
       val df = query()
       (df.collect(), df.queryExecution.optimizedPlan.toString)
     }
@@ -99,7 +92,7 @@ class FuseDotProductSpec extends AnyFunSuite {
       .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
     val portable = e.select(col("vec_id"), VectorOps.dot(col("v"), col("v")).as("d"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val fused = withRule {
+    val fused = withFuseDotProduct {
       e.select(col("vec_id"), VectorOps.dot(col("v"), col("v")).as("d"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     }

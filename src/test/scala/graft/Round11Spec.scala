@@ -414,9 +414,6 @@ class Round11Spec extends AnyFunSuite {
     val got = edges.select(intDot($"a", $"b")).collect()
     assert(got.forall(_.isNullAt(0)))
     // SQL surface registration
-    graft.plans.GraftExtensions.registrations.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
     df.createOrReplaceTempView("r11_intdot")
     assert(spark.sql("SELECT int_dot(a, b) AS d FROM r11_intdot ORDER BY d")
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 0L, 32L))

@@ -4,13 +4,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{DetLn, IntDotProduct, SignPack}
-import graft.plans.FuseDotProduct
+import graft.SparkTestSession.withFuseDotProduct
 
 /** Round 12: the advisor-hardening and native-expression work —
   * [[SignPack]] bit-identity with the interpreted fold it replaced,
   * [[DetLn]]'s deterministic cross-engine log, the m08 empty-document and
-  * q85/q86 degenerate-group guards, and [[FuseDotProduct]] binding the
-  * matched fold's evalMode instead of the optimization-time session conf.
+  * q85/q86 degenerate-group guards, and [[graft.plans.FuseDotProduct]]
+  * binding the matched fold's evalMode instead of the optimization-time
+  * session conf.
   */
 class Round12Spec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -178,13 +179,6 @@ class Round12Spec extends AnyFunSuite {
 
   // ---- FuseDotProduct evalMode binding ----
 
-  private def withRule[A](body: => A): A = {
-    spark.experimental.extraOptimizations ++= Seq(FuseDotProduct)
-    try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == FuseDotProduct)
-  }
-
   test("s24 stored-index probe returns exactly s05's live-index results") {
     val dir = "/root/testdata/sf0.001"
     val live = ExtensionQueries.all("s05_knn_ivf_learned")(spark, dir)
@@ -251,7 +245,7 @@ class Round12Spec extends AnyFunSuite {
       // flip the session conf BEFORE optimization: the old rule read
       // SQLConf at rewrite time and would bind failOnError = true here
       spark.conf.set("spark.sql.ansi.enabled", "true")
-      val fused = withRule {
+      val fused = withFuseDotProduct {
         q.queryExecution.optimizedPlan.expressions
           .flatMap(_.collect { case d: IntDotProduct => d })
       }
@@ -267,7 +261,7 @@ class Round12Spec extends AnyFunSuite {
       "aggregate(zip_with(a, b, (x, y) -> try_multiply(x, y)), 0L, (acc, v) -> try_add(acc, v))",
       // mixed modes: zip multiplies plainly, merge is TRY
       "aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> try_add(acc, v))")
-    withRule {
+    withFuseDotProduct {
       cases.foreach { e =>
         val plan = df.selectExpr(s"$e AS d").queryExecution.optimizedPlan.toString
         assert(!plan.contains("int_dot"), s"rule wrongly fired on: $e\n$plan")

@@ -266,9 +266,6 @@ class Round13Spec extends AnyFunSuite {
       .collect().forall(_.isNullAt(0)),
       "non-finite input must null, not emit garbage codes")
     // SQL registration round-trips through the extension point
-    graft.plans.GraftExtensions.registrations.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
     val sql = spark.sql("SELECT int8_quantize(array(CAST(-1.0 AS DOUBLE), " +
       "CAST(0.25 AS DOUBLE), CAST(1.0 AS DOUBLE)))").collect()(0).getSeq[Long](0)
     assert(sql == Seq(-127L, 32L, 127L))

@@ -129,9 +129,6 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("intersect_count is registered on the SQL surface") {
-    graft.plans.GraftExtensions.registrations.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
     // deliberately INT-literal arrays: the registration must cast to
     // array<bigint> like the Column API, or getLong mis-strides the
     // 4-byte-packed elements at execution

@@ -239,9 +239,6 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("every GraftExtensions function is SQL-callable and matches its Column twin") {
-    graft.plans.GraftExtensions.registrations.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
     val docs = t("documents").limit(50).select(col("doc_id"), col("text"))
     docs.createOrReplaceTempView("__ext_docs")
     val viaSql = spark.sql("""

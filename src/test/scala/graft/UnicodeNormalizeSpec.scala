@@ -42,15 +42,6 @@ class UnicodeNormalizeSpec extends AnyFunSuite {
   }
 
   test("nfc_normalize is SQL-callable once registered (GraftExtensions wiring)") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    // getOrCreate reuses the shared session, so register through the same
-    // builder function GraftExtensions injects.
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalizeNFC].getName, "nfc_normalize"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        UnicodeNormalizeNFC(exprs(0)))
     val got = spark.sql("SELECT nfc_normalize('cafe\u0301') AS n").first.getString(0)
     assert(got == "caf\u00e9")
   }

@@ -11,6 +11,15 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# One engine session: graft.Engine is the only session builder in src/main,
+# so every main runs under the same optimizer rules and confs.
+if builders=$(grep -rn "SparkSession.builder" src/main \
+    | grep -v "^src/main/scala/graft/Engine.scala:"); then
+  echo "precommit: SparkSession.builder outside graft.Engine:" >&2
+  echo "$builders" >&2
+  exit 1
+fi
+
 if ! sbt -batch Test/compile >/tmp/precommit.log 2>&1; then
   echo "precommit: COMPILE FAILED — refusing snapshot" >&2
   grep -E "\[error\]" /tmp/precommit.log | head -20 >&2
