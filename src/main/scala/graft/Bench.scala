@@ -128,6 +128,23 @@ object Bench {
 
   private def r3(x: Double): Double = math.floor(x * 1000 + 0.5) / 1000
 
+  /** Where the full first-pass map goes, and the JSON field naming its
+    * filter. A `SPARK_GRAFT_BENCH_ONLY` run covers a subset, so it writes
+    * bench_full_filtered.json with the regex, never over a full run's map.
+    */
+  private[graft] def fullMapFile(only: Option[String]): (String, String) = only match {
+    case Some(re) => ("bench_full_filtered.json", s""","only":"${jsonEscape(re)}"""")
+    case None => ("bench_full.json", "")
+  }
+
+  /** A JSON string body: quote, backslash and control chars escaped. */
+  private def jsonEscape(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session()
@@ -292,14 +309,15 @@ object Bench {
     // the ~180 non-headline queries was unattributable from driver
     // artifacts in r21. bench_full.json makes every total auditable
     // query-by-query; it is measurement output only — nothing reads it.
+    val (fullFile, onlyJson) = fullMapFile(only.map(_.regex))
     try {
       val fp = results.collect { case (n, Some(v)) => s""""$n":${r3(v)}""" }
         .toVector.sorted.mkString("{", ",", "}")
-      val json = s"""{"sf":"$sfDir","cpus":${Engine.cpus},"hmode_first_pass":"cold-ish single sample","first_pass":$fp,"min2warm_headline":$min2warm,"diag":$diagJson,"total_first_pass_production":$total,"diag_sec":$diagSec$failedJson}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
+      val json = s"""{"sf":"$sfDir","cpus":${Engine.cpus}$onlyJson,"hmode_first_pass":"cold-ish single sample","first_pass":$fp,"min2warm_headline":$min2warm,"diag":$diagJson,"total_first_pass_production":$total,"diag_sec":$diagSec$failedJson}"""
+      java.nio.file.Files.write(java.nio.file.Paths.get(fullFile),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] bench_full.json write failed: ${e.getMessage}")
+      System.err.println(s"[bench] $fullFile write failed: ${e.getMessage}")
     }
     spark.catalog.clearCache()
     spark.stop()

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd 48-bit MD5 hash: the top 48 bits of md5(utf8-bytes),
@@ -26,8 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * ANALYZE aggregate 8.81 -> 3.75 s; bench min2warm at 32 cores:
   * q99 10.01 -> 5.68 s, q96 2.16 -> 1.52 s, q88 1.06 -> 0.62 s.
   */
-case class Md5Hash48(child: Expression) extends UnaryExpression {
+case class Md5Hash48(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
+  // a non-string child fails analysis with a type-mismatch message instead
+  // of a ClassCastException from nullSafeEval at run time (the element type
+  // is Spark's AbstractDataType, which is private to its sql package)
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "md5_hash48"

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Min-max 0-100 score normalization (reference `App.scala:175-201`).
@@ -10,8 +11,9 @@ import org.apache.spark.sql.functions._
   * a manual scalar-subquery materialization that costs an extra Spark job
   * and a driver round-trip. The engine's default is the lazy form: the 1-row
   * MIN/MAX aggregate is broadcast-cross-joined so the whole thing stays one
-  * job and scales to arbitrarily large inputs. Both variants are provided
-  * and tested equivalent.
+  * job and scales to arbitrarily large inputs; for inputs bounded by a
+  * dimension, a whole-frame window does the same in one read. All variants
+  * are provided and tested equivalent.
   *
   * Faithful edge case: when min == max the expression is 0/0 on doubles
   * -> NaN, exactly like the reference (no guard, SURVEY §2 D5).
@@ -35,6 +37,16 @@ object Score {
     df.crossJoin(mm)
       .withColumn(outCol, scoreExpr(col(valueCol), col("__mn"), col("__mx")))
       .drop("__mn", "__mx")
+  }
+
+  /** Window variant, for a `v` over a dimension-bounded input: min and max
+    * over the whole frame, so it runs in one task and needs no second read
+    * of the input (the cross-join form consumes it twice, which makes a
+    * caller persist it). Same values as [[minMaxScore]].
+    */
+  def minMaxOver(v: Column): Column = {
+    val all = Window.partitionBy()
+    scoreExpr(v, min(v).over(all), max(v).over(all))
   }
 
   /** Reference-faithful variant (`App.scala:175-185`): collect the 1-row

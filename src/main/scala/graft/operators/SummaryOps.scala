@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reporting-summary operators (reference `App.scala:208-263`). */
@@ -11,9 +11,11 @@ object SummaryOps {
     * shuffle on `keys`; partial aggregation map-side keeps shuffle volume at
     * |groups| x |cols| regardless of input size. Uses [[Agg.decAvg]] so the
     * result is bit-identical under any partitioning (see Agg's scaladoc).
+    * `extra` aggregates ride the same hash aggregate.
     */
-  def multiAvg(df: DataFrame, keys: Seq[String], valueCols: Seq[String]): DataFrame = {
-    val aggs = valueCols.map(c => Agg.decAvg(col(c)).as(s"avg_$c"))
+  def multiAvg(df: DataFrame, keys: Seq[String], valueCols: Seq[String],
+      extra: Column*): DataFrame = {
+    val aggs = valueCols.map(c => Agg.decAvg(col(c)).as(s"avg_$c")) ++ extra
     df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 

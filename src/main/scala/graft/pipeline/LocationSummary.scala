@@ -3,6 +3,7 @@ package graft.pipeline
 import java.sql.Date
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Agg, Enrich, Score, Snapshot, SummaryOps}
@@ -16,17 +17,21 @@ import graft.sources.Tables
   *   - fact_crime_rate (App.scala:22-50)      -> lineitem via supplier;
   *     crime_type <- l_returnflag; latest snapshot-year per (location, type)
   *   - fact_living_wage (App.scala:52-75)     -> orders via customer; global
-  *     latest year + one deterministic row per location
+  *     latest year + one deterministic row per location (argmax in the
+  *     listing aggregate)
   *   - fact_typical_annual_salary (77-93)     -> customer account balances
   *   - fact_annual_expense (110-133)          -> lineitem via supplier,
   *     filtered, global latest year
   *   - fact_listing (135-169)                 -> orders as listings; removal
   *     events derived from lineitem (nullable -> left join)
   *
-  * Every stage is shuffle-parallel: the only broadcast sides are bounded
-  * dimensions (25 nations) and 1-row scalar aggregates. No driver-side
-  * collection anywhere (the reference's `.first` min/max is replaced by the
-  * lazy broadcast-cross-join in [[Score.minMaxScore]]).
+  * Every stage over a fact is shuffle-parallel: the only broadcast sides
+  * are bounded dimensions (25 nations) and the 1-row latest-year scalar,
+  * and the only single-task windows run over dimension-bounded aggregates.
+  * No driver-side collection anywhere (the reference's `.first` min/max is
+  * replaced by the lazy window in [[Score.minMaxOver]]). A build scans
+  * lineitem twice (the summary and the removals) and orders once, and
+  * persists only the two fact joins.
   */
 object LocationSummary {
 
@@ -59,10 +64,11 @@ object LocationSummary {
     // decimal sums are associative.
     //
     // The summary is persisted (lazy, lineage-backed — an executor loss
-    // recomputes it, unlike localCheckpoint) so the two branch forks read
-    // the ~500-row cache instead of re-running the scan; Spark's
-    // CacheManager dedupes by canonicalized plan, so repeated build() calls
-    // share one entry rather than accumulating copies.
+    // recomputes it, unlike localCheckpoint) so every build() in a session
+    // (the report, its sinks, repeated runs) reads the ~500-row cache
+    // instead of re-scanning lineitem; Spark's CacheManager dedupes by
+    // canonicalized plan, so those calls share one entry rather than
+    // accumulating copies.
     val factYearly = lineitem
       .join(supplier, lineitem("l_suppkey") === supplier("s_suppkey"), "inner")
       .groupBy(
@@ -73,66 +79,55 @@ object LocationSummary {
         Agg.decPartialSum(col("l_extendedprice") / 1000).as("sum_rate"),
         count(col("l_extendedprice")).as("cnt_rate"),
         Agg.decPartialSum(col("l_extendedprice") * (col("l_tax") + 0.05)).as("sum_amount"),
-        count(col("l_extendedprice") * (col("l_tax") + 0.05)).as("cnt_amount"),
-        count(when(col("l_returnflag") === "N", lit(1))).as("n_rows_n"))
+        count(col("l_extendedprice") * (col("l_tax") + 0.05)).as("cnt_amount"))
       .persist()
 
-    // Latest snapshot-year per (location, crime_type) via the reference's
-    // groupBy-MAX + join-back (App.scala:27-48), now over the tiny summary.
-    val crimeYearly = factYearly.select(
-      col("location_id"), col("l_returnflag").as("crime_type"),
-      col("snap_year"), col("sum_rate"), col("cnt_rate"))
-    val crimeLatest = Snapshot.latestPerKeyJoin(crimeYearly, Seq("location_id", "crime_type"), "snap_year")
-    // Per-location branch outputs are dimension-bounded (≤ |locations| rows
-    // at ANY input scale), but minMaxScore consumes its input twice (the
-    // 1-row MIN/MAX aggregate + the probe side) and column pruning again
-    // blocks subtree reuse — so persist the tiny aggregate and each branch's
-    // upstream (cache scan → agg → join) runs exactly once.
-    val crimeAvg = crimeLatest
-      .join(dimLocation, Seq("location_id"), "inner")
-      .groupBy("location_id", "zip_code")
-      .agg(Agg.decReAvg(col("sum_rate"), col("cnt_rate")).alias("avg_crime_rate"))
-      .persist()
-    val crimeNormalized = Score.minMaxScore(crimeAvg, "avg_crime_rate", "normalized_crime_rate")
+    // Both branches in ONE pass over the summary. Window maxima stand in for
+    // the reference's latest-snapshot join-backs: per (location, crime_type)
+    // for crime (App.scala:27-48), and over the 'N' rows of every location
+    // for expense (App.scala:115-128). A window over the whole summary runs
+    // in one task, which is cheap only because the summary is
+    // dimension-bounded. The branches are CASE expressions, not filters, so
+    // nothing is pushed into the summary's own plan and the cache is shared.
+    val inCrime = col("snap_year") === col("crime_latest")
+    val inExpense = col("l_returnflag") === "N" && col("snap_year") === col("expense_latest")
+    // One aggregate per location re-sums each branch's latest-year partials
+    // and counts its rows: the reference inner-joins both branches, so a
+    // location without rows in either is dropped, but only AFTER the scores
+    // are scaled over every location the branch has.
+    val scores = factYearly
+      .withColumn("crime_latest",
+        max(col("snap_year")).over(Window.partitionBy("location_id", "l_returnflag")))
+      .withColumn("expense_latest",
+        max(when(col("l_returnflag") === "N", col("snap_year"))).over(Window.partitionBy()))
+      .join(dimLocation, Seq("location_id"), "left_semi")
+      .groupBy("location_id")
+      .agg(
+        Agg.decReAvg(when(inCrime, col("sum_rate")), when(inCrime, col("cnt_rate")))
+          .as("avg_crime_rate"),
+        count(when(inCrime, lit(1))).as("crime_rows"),
+        Agg.decReAvg(when(inExpense, col("sum_amount")), when(inExpense, col("cnt_amount")))
+          .as("avg_expense"),
+        count(when(inExpense, lit(1))).as("expense_rows"))
+      // min/max windows over the ≤ |locations|-row result
+      .withColumn("normalized_crime_rate", Score.minMaxOver(col("avg_crime_rate")))
+      .withColumn("normalized_expense", Score.minMaxOver(col("avg_expense")))
+      .filter(col("crime_rows") > 0 && col("expense_rows") > 0)
+      .select("location_id", "normalized_crime_rate", "normalized_expense")
 
-    // Expense keeps only l_returnflag = 'N' rows. The filter is expressed on
-    // the aggregate output n_rows_n (equivalent to flag = 'N': the flag is a
-    // grouping key, so a group counts either all or none of its rows) rather
-    // than the grouping column itself — a grouping-column predicate would be
-    // pushed below the aggregate into the scan, splitting the shared summary
-    // back into two distinct scans.
-    val expenseYearly = factYearly
-      .filter(col("n_rows_n") > 0)
-      .select(col("location_id"), col("snap_year"), col("sum_amount"), col("cnt_amount"))
-    val expenseLatest = Snapshot.filterLatestGlobal(expenseYearly, "snap_year")
-    val expenseAvg = expenseLatest
-      .join(dimLocation, Seq("location_id"), "inner")
-      .groupBy("location_id", "zip_code")
-      .agg(Agg.decReAvg(col("sum_amount"), col("cnt_amount")).alias("avg_expense"))
-      .persist() // dimension-bounded; see crimeAvg
-    val expenseNormalized = Score.minMaxScore(expenseAvg, "avg_expense", "normalized_expense")
-
-    // fact_living_wage: global latest year, one row per location
-    // (App.scala:52-75 — there the household filter selects the row; here a
-    // deterministic argmax by (o_orderdate, o_orderkey) does).
-    //
-    // fact_living_wage and fact_listing BOTH consume orders⋈customer
-    // restricted to the latest snapshot year, and the latest-year scalar is
-    // a THIRD consumer of the same join. Sharing the DataFrame (even routed
-    // through one explicit exchange) is NOT enough: column pruning rewrites
+    // fact_living_wage (App.scala:52-75) and fact_listing (App.scala:135-169)
+    // BOTH consume orders⋈customer restricted to the global latest snapshot
+    // year, and the latest-year scalar is a second consumer of the same
+    // join. Sharing the DataFrame is NOT enough: column pruning rewrites
     // each consumer's copy of the subtree with a different projection, the
-    // canonical plans diverge, ReuseExchange never fires, and the join
-    // executed three times (measured: three concurrent ~4 s jobs at sf0.1,
-    // 52 parquet scans in the executed plan). persist() is the
-    // pruning-proof share: CacheManager dedupes by canonicalized plan, so
-    // the max-year scalar, the wage window, and the listing branch all read
-    // ONE materialized copy. The explicit location_id repartition before
-    // the cache means the window branch needs no further exchange
-    // (InMemoryTableScan preserves the cached plan's partitioning), and the
-    // per-location aggregates downstream shuffle only dimension-sized data.
-    // At 100 TB this is a spill-capable (MEMORY_AND_DISK) cache of the
-    // join output — ~1 GB/executor on a 1000-executor cluster — vs running
-    // the dominant join three times.
+    // canonical plans diverge, ReuseExchange never fires, and the join runs
+    // once per consumer (measured: concurrent ~4 s jobs at sf0.1, 52 parquet
+    // scans in the executed plan). persist() is the pruning-proof share:
+    // CacheManager dedupes by canonicalized plan, so the max-year scalar and
+    // the listing aggregate read ONE materialized copy. At 100 TB this is a
+    // spill-capable (MEMORY_AND_DISK) cache of the join output — ~1 GB per
+    // executor on a 1000-executor cluster — vs running the dominant join
+    // twice.
     val ordersCustomer = orders
       .join(customer, orders("o_custkey") === customer("c_custkey"), "inner")
       .select(
@@ -142,18 +137,8 @@ object LocationSummary {
         col("o_totalprice"),
         col("o_orderdate"),
         year(col("o_orderdate")).as("snap_year"))
-      .repartition(col("location_id"))
       .persist()
     val ocLatest = Snapshot.filterLatestGlobal(ordersCustomer, "snap_year")
-
-    val recommendedAnnSalary = Snapshot
-      .latestPerKeyWindow(
-        ocLatest,
-        Seq("location_id"),
-        Seq(col("o_orderdate").desc, col("o_orderkey").desc))
-      .withColumn("hourly_wage", col("o_totalprice") / 1000)
-      .withColumn("RECOMMENDED_ANNUAL_SALARY", Enrich.annualize(col("hourly_wage")))
-      .select("location_id", "RECOMMENDED_ANNUAL_SALARY")
 
     // fact_typical_annual_salary: grouped AVG per location (App.scala:208-209).
     val avgAnnualSalary = customer
@@ -167,12 +152,10 @@ object LocationSummary {
       .filter(col("l_linenumber") === 7)
       .groupBy(col("l_orderkey"))
       .agg(max(col("l_shipdate")).as("removed_ts"))
-    // derived from the SHARED latest-year orders⋈customer subtree (above);
-    // the original applied filterLatestGlobal after this projection, which
-    // commutes (snap_year is untouched by it)
     val listingBase = ocLatest
       .select(
         col("o_orderkey"),
+        col("o_orderdate"),
         col("location_id"),
         col("o_totalprice").as("price"),
         (col("o_orderkey") % 4 + 1).as("bathrooms"),
@@ -186,23 +169,23 @@ object LocationSummary {
       .withColumn("age_in_years", Enrich.ageInYears(col("year_built"), asOf))
       .withColumn("days_on_market",
         Enrich.daysOnMarket(col("listed_date"), col("removed_date"), asOf))
+    // fact_living_wage rides the listing aggregate: the same latest-year
+    // rows, one per location picked by argmax (o_orderdate, o_orderkey) —
+    // the row a row_number() window would pick, as o_orderkey is unique
+    // (App.scala:52-75: there the household filter selects the row).
     val listingSummary = SummaryOps.multiAvg(
       listing, Seq("location_id"),
-      Seq("price", "bathrooms", "bedrooms", "age_in_years", "square_footage", "days_on_market"))
+      Seq("price", "bathrooms", "bedrooms", "age_in_years", "square_footage", "days_on_market"),
+      Enrich.annualize(max_by(col("price"), struct(col("o_orderdate"), col("o_orderkey"))) / 1000)
+        .as("RECOMMENDED_ANNUAL_SALARY"))
 
-    // Star-join chain on location_id (App.scala:217-232), including the
-    // lineage-qualified duplicate-zip_code drops (App.scala:229, 237).
-    val listingLocation = listingSummary.join(dimLocation, Seq("location_id"), "inner")
-    val listingLocRecSal = listingLocation.join(recommendedAnnSalary, Seq("location_id"), "inner")
-    val listingLocRecSalAvgSal = listingLocRecSal.join(avgAnnualSalary, Seq("location_id"), "inner")
-    val withCrime = listingLocRecSalAvgSal
-      .join(crimeNormalized, Seq("location_id"), "inner")
-      .drop(listingLocRecSalAvgSal("zip_code"))
-    val raw = withCrime
-      .join(expenseNormalized, Seq("location_id"), "inner")
+    // Star-join chain on location_id (App.scala:217-232).
+    val raw = listingSummary
+      .join(dimLocation, Seq("location_id"), "inner")
+      .join(avgAnnualSalary, Seq("location_id"), "inner")
+      .join(scores, Seq("location_id"), "inner")
       .withColumn("AVERAGE_PRICE_PER_SQUARE_FOOT",
         Enrich.ratio(col("avg_price"), col("avg_square_footage")))
-      .drop(withCrime("zip_code"))
 
     SummaryOps.finalizeReport(
       raw.withColumn("SNAPSHOT_DATE", lit(asOf)),

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -72,7 +74,9 @@ object Scratch {
   private val registered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Remove the per-app scratch root when its SparkContext shuts down, so
-    * app-id-namespaced dirs don't accumulate in shared scratch storage.
+    * app-id-namespaced dirs don't accumulate in shared scratch storage. A
+    * failed delete is reported on stderr (path, class, message) and does not
+    * fail the shutdown; fatal errors propagate.
     */
   private def cleanupOnExit(spark: SparkSession, appRoot: Path): Unit =
     if (registered.add(appRoot.toString)) {
@@ -80,8 +84,11 @@ object Scratch {
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          try appRoot.getFileSystem(conf).delete(appRoot, true)
-          catch { case _: Throwable => () }
+          try { appRoot.getFileSystem(conf).delete(appRoot, true); () }
+          catch { case NonFatal(e) =>
+            System.err.println(
+              s"[scratch] cleanup of $appRoot failed: ${e.getClass.getName}: ${e.getMessage}")
+          }
       })
     }
 }

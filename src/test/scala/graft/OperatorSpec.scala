@@ -62,6 +62,15 @@ class ScoreSpec extends AnyFunSuite {
     val b = Score.minMaxScoreCollect(df, "v", "s").orderBy("v").select("s").as[Double].collect()
     assert(a.toSeq == b.toSeq)
   }
+
+  test("window variant equals the cross-join variant, nulls and NaN included") {
+    for (vs <- Seq(Seq(Some(1.0), Some(4.0), None, Some(11.25)), Seq(Some(2.0), Some(2.0)))) {
+      val df = vs.toDF("v")
+      val a = Score.minMaxScore(df, "v", "s").orderBy("v").select("s").collect()
+      val b = df.withColumn("s", Score.minMaxOver(col("v"))).orderBy("v").select("s").collect()
+      assert(a.toSeq == b.toSeq, s"$vs")
+    }
+  }
 }
 
 class AggSpec extends AnyFunSuite {

@@ -70,8 +70,8 @@ class PlanSpec extends AnyFunSuite {
       def isLineitem(f: FileSourceScanExec): Boolean =
         f.relation.location.rootPaths.exists(_.toString.contains("lineitem"))
       // Cached plans may themselves be AQE-wrapped (opaque to collect), and
-      // caches NEST (branch-aggregate caches read the factYearly cache), so
-      // the walk recurses through cache builders too, deduping shared ones.
+      // a cache may read another cache, so the walk recurses through cache
+      // builders too, deduping shared ones.
       import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
       val seenBuilders = scala.collection.mutable.LinkedHashMap[AnyRef, SparkPlan]()
       def walk(p: SparkPlan): Seq[FileSourceScanExec] = {
@@ -86,12 +86,13 @@ class PlanSpec extends AnyFunSuite {
         self ++ kids.flatMap(walk)
       }
       val allScans = walk(exec)
-      // crime (summary + its groupBy-MAX side) and expense (filter + its
-      // global-latest scalar) all read the shared pre-agg from cache.
+      // crime and expense (both latest-year windows) read the shared
+      // pre-agg from cache, the listing and its latest-year scalar the
+      // shared orders join.
       assert(seenBuilders.size >= 2, s"expected >=2 cache builders, got ${seenBuilders.size}:\n$exec")
-      // One physical materialization of the lineitem summary: among all the
-      // pipeline's caches (factYearly, ordersCustomer, branch aggregates),
-      // exactly ONE builder touches lineitem, and its plan scans it once.
+      // One physical materialization of the lineitem summary: among the
+      // pipeline's caches (factYearly, ordersCustomer), exactly ONE builder
+      // touches lineitem, and its plan scans it once.
       def walkCached(p: SparkPlan): Seq[FileSourceScanExec] = {
         val self = p match { case f: FileSourceScanExec => Seq(f); case _ => Nil }
         val kids = p match {
@@ -108,6 +109,44 @@ class PlanSpec extends AnyFunSuite {
       // Outside the cache, the only lineitem scan left is removals.
       val topLevel = exec.collect { case f: FileSourceScanExec if isLineitem(f) => f }.size
       assert(topLevel == 1, s"expected exactly the removals scan at top level, got $topLevel:\n$exec")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("flagship caches exactly its two fact joins") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    // Every persisted plan keeps its broadcast relations alive for the
+    // session, so the flagship persists only the lineitem summary and the
+    // orders join, not the per-location aggregates.
+    spark.catalog.clearCache() // count this build's entries, not a prior test's
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // see the test above
+    try {
+      val exec = SparkEntry.queries("flagship_location_summary")(spark, dir)
+        .queryExecution.executedPlan
+      assert(org.apache.spark.sql.graft.CacheEntries(spark) == 2)
+      val cachedScans = exec.collectWithSubqueries { case im: InMemoryTableScanExec =>
+        im.relation.cacheBuilder.cachedPlan.collectWithSubqueries {
+          case f: FileSourceScanExec => f.relation.location.rootPaths.head.getName
+        }.toSet
+      }.toSet
+      assert(cachedScans == Set(
+        Set("lineitem.parquet", "supplier.parquet"), Set("orders.parquet", "customer.parquet")),
+        s"cached relations: $cachedScans")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("flagship_sql scans lineitem twice and orders at most twice") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val exec = SparkEntry.queries("flagship_sql")(spark, dir).queryExecution.executedPlan
+      val scans = exec.collectWithSubqueries {
+        case f: FileSourceScanExec => f.relation.location.rootPaths.head.getName
+      }
+      // lineitem: the fact_yearly summary and the removals
+      assert(scans.count(_ == "lineitem.parquet") == 2, s"$scans\n$exec")
+      // orders: the listing and its latest-year scalar
+      assert(scans.count(_ == "orders.parquet") <= 2, s"$scans\n$exec")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -286,7 +325,14 @@ class PlanSpec extends AnyFunSuite {
       // source-cardinality-bounded; the doc-level rank window is
       // PARTITIONED (by source)
       "t41_mixture_sample" ->
-        "allocation table is source-cardinality-bounded (one row per source)")
+        "allocation table is source-cardinality-bounded (one row per source)",
+      // the global latest 'N' year runs over the lineitem summary (one row
+      // per location x return flag x ship year out of an aggregate), the
+      // score min/max over the per-location aggregate; the per-flag latest
+      // year is PARTITIONED (by location, flag)
+      "flagship_location_summary" ->
+        "summary is dimension-bounded (locations x flags x years)",
+      "flagship_sql" -> "summary is dimension-bounded (locations x flags x years)")
     def boundedBelow(p: SparkPlan): Boolean = p match {
       case _: GlobalLimitExec | _: LocalLimitExec | _: CollectLimitExec |
            _: TakeOrderedAndProjectExec => true

@@ -47,6 +47,20 @@ class Round22Spec extends AnyFunSuite {
     assert(bad.count() == 0, bad.take(5).mkString("\n"))
   }
 
+  test("md5_hash48 rejects a non-string child at analysis") {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val raw = ColumnBridge.column(
+      graft.functions.Md5Hash48(ColumnBridge.expression(lit(42L))))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(1).select(raw).collect())
+    assert(e.getMessage.contains("md5_hash48") && e.getMessage.contains("STRING"),
+      e.getMessage)
+    // the Column entry point casts first, so any type hashes its rendering
+    assert(spark.range(1).select(graft.functions.Md5Hash48.md5Hash48(lit(42L)))
+      .head().getLong(0) ==
+      spark.range(1).select(md5Hash48Reference(lit(42L))).head().getLong(0))
+  }
+
   test("md5_hash48 runs as the native expression in the sketch hot paths") {
     // q89 hashes live in its returned plan (q96/q99 hash inside their
     // artifact-build side effect, which the returned serve plan no longer

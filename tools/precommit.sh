@@ -20,6 +20,14 @@ if builders=$(grep -rn "SparkSession.builder" src/main \
   exit 1
 fi
 
+# Harness failures stay visible: no handler in src/main may swallow fatal
+# errors; catch NonFatal and report the class and message.
+if throwables=$(grep -rn "case _: Throwable" src/main); then
+  echo "precommit: catch-all Throwable handler in src/main:" >&2
+  echo "$throwables" >&2
+  exit 1
+fi
+
 if ! sbt -batch Test/compile >/tmp/precommit.log 2>&1; then
   echo "precommit: COMPILE FAILED — refusing snapshot" >&2
   grep -E "\[error\]" /tmp/precommit.log | head -20 >&2
